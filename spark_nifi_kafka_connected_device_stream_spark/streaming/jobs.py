@@ -12,14 +12,63 @@ checkpoint — the §2.7 "two concurrent queries on one lineage" pattern.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..sources.json_events import json_file_stream
 from .pipeline import parse_product_views, windowed_source_counts
 from .sinks import foreach_batch_topk, parquet_sink
+
+# One state partition, for aggregates whose key space is a handful of
+# groups (product views: ≤3 sources × ~2 open windows; seasonal: one
+# count per open hour).  Every state partition commits its own delta
+# and checksum files each batch, whatever it holds, so the session's
+# core-sized default makes the state commit scale with the core count
+# instead of the data.  The partial aggregation before the exchange
+# keeps the scan's full parallelism.
+_ONE_STATE_PARTITION = {"spark.sql.shuffle.partitions": "1"}
+
+
+def _start_queries(
+    spark: SparkSession,
+    writers: Sequence[DataStreamWriter],
+    confs: dict[str, str] | None = None,
+) -> list[StreamingQuery]:
+    """Start `writers` in order with the SQL `confs` set on `spark`'s
+    session for the duration of the starts only.
+
+    A query clones its session's SQL conf when it starts, so the values
+    bind to these queries alone and the session is left as it was, also
+    when a start raises.  Restarts honour the checkpoint: Spark records
+    the shuffle-partition count (the state-partition count) in the
+    offset log and a query resumed from it keeps the recorded count.
+    If a later start fails, the queries already started are stopped
+    before the error propagates, so none is orphaned advancing its
+    checkpoint.  The session conf is shared, so starts from other
+    threads during the call see `confs` too."""
+    confs = confs or {}
+    conf = spark.conf
+    saved = {k: conf.get(k, None) for k in confs}
+    started: list[StreamingQuery] = []
+    try:
+        for k, v in confs.items():
+            conf.set(k, v)
+        for w in writers:
+            started.append(w.start())
+    except BaseException:
+        for q in started:
+            q.stop()
+        raise
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+    return started
 
 
 def run_product_view_job(
@@ -37,9 +86,10 @@ def run_product_view_job(
     """The full v2 pipeline on the file source (Kafka-swappable: pass
     any raw DataFrame with a `value` column through the same chain).
 
-    Returns the two StreamingQuery handles (ranking, parquet).  With
-    `block=True` behaves like the reference's awaitTermination
-    (v2:91)."""
+    Both queries start with one state partition (_ONE_STATE_PARTITION);
+    a checkpoint written with more keeps its own count.  Returns the
+    two StreamingQuery handles (ranking, parquet).  With `block=True`
+    behaves like the reference's awaitTermination (v2:91)."""
     raw = json_file_stream(spark, input_dir)
     agg = windowed_source_counts(
         parse_product_views(raw),
@@ -52,24 +102,23 @@ def run_product_view_job(
     # console micro-batch the same way) — it is a delta ranking, not
     # a global standing; consumers needing the global top-k over all
     # open windows read sink B and rank there
-    ranking_q = (
+    ranking_w = (
         foreach_batch_topk(agg, k=topk, collector=collector)
         .outputMode("update")
         .option("checkpointLocation", f"{checkpoint_dir}/ranking")
-        .start()
     )
     # sink B (v2:84-89): warehouse parquet, columns pruned to the
     # commerce schema (source, source_number) as at v2:74.  If ITS
-    # start fails (bad trigger string, unwritable path), the already-
-    # running sink A must not leak as an orphaned query advancing its
-    # checkpoint forever (round-16 review)
+    # start fails (bad trigger string, unwritable path), _start_queries
+    # stops the already-running sink A so it cannot leak as an orphaned
+    # query advancing its checkpoint forever
     pruned = agg.select("source", "source_number")
-    w = parquet_sink(pruned, output_dir, f"{checkpoint_dir}/parquet", trigger=trigger)
-    try:
-        parquet_q = w.start()
-    except Exception:
-        ranking_q.stop()
-        raise
+    parquet_w = parquet_sink(
+        pruned, output_dir, f"{checkpoint_dir}/parquet", trigger=trigger
+    )
+    ranking_q, parquet_q = _start_queries(
+        spark, [ranking_w, parquet_w], _ONE_STATE_PARTITION
+    )
     if block:
         for q in (ranking_q, parquet_q):
             q.awaitTermination()
@@ -157,9 +206,24 @@ def run_corpus_ingest_job(
           → append-mode parquet corpus shards (K3 sink)
 
     Scale posture: every stage before the dedup is stateless map-only
-    column math; the dedup's state is bounded by the watermark horizon;
-    the sink partitions by source so downstream mix/split jobs
-    partition-prune.  Returns the StreamingQuery handle.
+    column math; the dedup's state is bounded by the watermark horizon
+    and keeps the session's full shuffle width (it holds every
+    fingerprint of the horizon); the sink partitions by source so
+    downstream mix/split jobs partition-prune, and the kept rows are
+    repartitioned by source first, so each micro-batch writes one file
+    per `source=` directory instead of one per (task, source).
+
+    The query runs with no-data micro-batches off: Spark would
+    otherwise follow every batch that moves the watermark with a batch
+    that reads nothing and only evicts dedup state.  Eviction then
+    happens in the next data batch, which runs at the same watermark
+    and checks its rows against the state BEFORE it evicts.  So a
+    re-arrival whose original's horizon has just passed may be dropped
+    instead of passed, where an eviction-only batch would have freed
+    the key first.  That is within `dropDuplicatesWithinWatermark`'s
+    contract: duplicates within the horizon are dropped, and whether a
+    re-arrival beyond it passes is not guaranteed.  Returns the
+    StreamingQuery handle.
     """
     from ..functions.textfns import normalize_text
     from ..operators.text import quality_features, quality_prob
@@ -189,9 +253,13 @@ def run_corpus_ingest_job(
         scored, fingerprint_cols=("fingerprint",), ts_col="event_ts",
         watermark=watermark,
     )
-    w = parquet_sink(deduped, out_dir, f"{checkpoint_dir}/corpus", trigger=trigger)
-    w = w.partitionBy("source")
-    return w.start()
+    w = parquet_sink(
+        deduped.repartition("source"), out_dir, f"{checkpoint_dir}/corpus",
+        trigger=trigger,
+    ).partitionBy("source")
+    return _start_queries(
+        spark, [w], {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    )[0]
 
 
 def run_seasonal_anomaly_job(
@@ -214,9 +282,12 @@ def run_seasonal_anomaly_job(
     only watermark-finalized hours are scored — a half-full hour would
     z-score as a false dip) → foreachBatch joins the tiny broadcast
     baseline and writes scored rows to parquet.  Streaming state is
-    one count per open hour; the baseline is |24| rows refreshed by
-    re-running the batch job and restarting (or swapping a Delta table
-    in production).  Returns the StreamingQuery handle.
+    one count per open hour, held in one state partition
+    (_ONE_STATE_PARTITION); no-data micro-batches stay on, because
+    they close finished hours when no input arrives.  The baseline is
+    |24| rows refreshed by re-running the batch job and restarting (or
+    swapping a Delta table in production).  Returns the StreamingQuery
+    handle.
 
     Sink layout (changed in round 11, with the exactly-once fix): the
     output is PARTITIONED as `out_dir/epoch=N/part-*.parquet` — each
@@ -259,7 +330,7 @@ def run_seasonal_anomaly_job(
     )
     if trigger:
         w = w.trigger(processingTime=trigger)
-    return w.start()
+    return _start_queries(spark, [w], _ONE_STATE_PARTITION)[0]
 
 
 def run_pii_gate_job(
@@ -285,7 +356,9 @@ def run_pii_gate_job(
     Sharing the expressions with the batch operator means the live
     gate and the batch backfill cannot disagree about what counts as
     PII.  Both stages are map-only regex over the stream; each sink
-    has its own checkpoint.  Returns (corpus_query, quarantine_query).
+    has its own checkpoint.  If the quarantine sink fails to start, the
+    corpus query is stopped before the error propagates.  Returns
+    (corpus_query, quarantine_query).
     """
     from ..operators.privacy import pii_counts, pii_redact
 
@@ -310,4 +383,5 @@ def run_pii_gate_job(
     w2 = parquet_sink(
         dirty, quarantine_dir, f"{checkpoint_dir}/quarantine", trigger=trigger
     )
-    return w1.start(), w2.start()
+    corpus_q, quarantine_q = _start_queries(spark, [w1, w2])
+    return corpus_q, quarantine_q

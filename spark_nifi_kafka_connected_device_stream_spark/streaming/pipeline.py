@@ -32,7 +32,16 @@ pipeline runs green under RocksDBStateStoreProvider
 the high-cardinality-churn escape hatch it exists for is pinned by
 tests/test_stateful_streaming.py::
 test_streaming_heavy_hitters_bounded_under_rocksdb (needle survives
-eviction pressure across RocksDB-serialized micro-batches).
+eviction pressure across RocksDB-serialized micro-batches).  The state
+is sized to that key space too: `streaming/jobs.py` starts the
+product-view queries with ONE state partition, not
+`spark.sql.shuffle.partitions` of them, because every state partition
+commits its own delta and checksum files each micro-batch whatever it
+holds.  On a local disk each created file costs a forked `chmod`
+(Hadoop 3.4's local file system without native libhadoop: 6-7 ms a
+file on a 4-core VM, more under load), so a core-sized width makes
+the state commit grow with the core count, not the data.  The partial aggregation before the exchange keeps the scan's
+full parallelism.
 """
 
 from __future__ import annotations

@@ -472,3 +472,277 @@ def test_seasonal_job_survives_degenerate_sigma(spark, tmp_path):
     ).select(F.to_date("day").alias("day"), "hour_of_day", "n_events")
     r = seasonal_score(hourly, baseline).collect()[0]
     assert r["zscore"] == 0.0 and r["is_anomaly"] is True
+
+
+# ---------------------------------------------------------------------------
+# per-query start confs: state-partition sizing, no eviction-only batches
+# ---------------------------------------------------------------------------
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+NO_DATA = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def _offset_conf(query_chk: str, batch: int) -> dict:
+    """The SQL confs Spark recorded in the offset log for `batch`."""
+    import json
+
+    with open(os.path.join(query_chk, "offsets", str(batch))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]
+
+
+def _batches(query_chk: str) -> list[int]:
+    return sorted(int(n) for n in os.listdir(os.path.join(query_chk, "offsets")) if n.isdigit())
+
+
+def _state_partitions(query_chk: str) -> list[str]:
+    """The state operator's partition directories."""
+    return sorted(n for n in os.listdir(os.path.join(query_chk, "state", "0")) if n.isdigit())
+
+
+def _run_pv(spark, in_dir, out_dir, chk, flush_name):
+    """Run the product-view job over `in_dir`, then land a flush file
+    that closes the earlier windows; return the last ranking count of
+    every (window start, source)."""
+    last = {}
+
+    def collector(df, epoch_id):
+        for r in df.collect():
+            last[(r["start"], r["source"])] = r["source_number"]
+
+    ranking_q, parquet_q = run_product_view_job(
+        spark, in_dir, out_dir, chk, topk=None, collector=collector
+    )
+    try:
+        ranking_q.processAllAvailable()
+        parquet_q.processAllAvailable()
+        _write_file(in_dir, flush_name, [e[2] for e in _mk_events(20, 6, start_i=999)])
+        ranking_q.processAllAvailable()
+        parquet_q.processAllAvailable()
+    finally:
+        ranking_q.stop()
+        parquet_q.stop()
+    return last
+
+
+def test_product_view_job_checkpoint_records_one_state_partition(spark, tmp_path):
+    """A new checkpoint is written with one state partition, and the
+    session keeps its own shuffle width."""
+    before = spark.conf.get(SHUFFLE)
+    in_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    _write_file(in_dir, "b1.json", [e[2] for e in _mk_events(0, 30)])
+    _run_pv(spark, in_dir, str(tmp_path / "out"), chk, "b2.json")
+    for sink in ("ranking", "parquet"):
+        assert _offset_conf(f"{chk}/{sink}", 0)[SHUFFLE] == "1"
+        assert _state_partitions(f"{chk}/{sink}") == ["0"]
+    assert spark.conf.get(SHUFFLE) == before != "1"
+
+
+def test_product_view_job_restart_keeps_checkpoint_partition_count(spark, tmp_path):
+    """A checkpoint written with the session's 4 state partitions keeps 4
+    when the job resumes from it, and the resumed job emits the same
+    windows as a fresh one."""
+    from spark_nifi_kafka_connected_device_stream_spark.sources.json_events import (
+        json_file_stream,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.pipeline import (
+        parse_product_views,
+        windowed_source_counts,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.sinks import (
+        foreach_batch_topk,
+        parquet_sink,
+    )
+
+    assert spark.conf.get(SHUFFLE) == "4"
+    first = [e[2] for e in _mk_events(0, 150) + _mk_events(5, 90, start_i=150)]
+
+    # the job's two queries, started at the session's width
+    old_in, old_out, old_chk = (str(tmp_path / d) for d in ("old_in", "old_out", "old_chk"))
+    _write_file(old_in, "b1.json", first)
+    agg = windowed_source_counts(parse_product_views(json_file_stream(spark, old_in)))
+    old_last = {}
+
+    def collector(df, epoch_id):
+        for r in df.collect():
+            old_last[(r["start"], r["source"])] = r["source_number"]
+
+    ranking_q = (
+        foreach_batch_topk(agg, k=None, collector=collector)
+        .outputMode("update")
+        .option("checkpointLocation", f"{old_chk}/ranking")
+        .start()
+    )
+    try:
+        parquet_q = parquet_sink(
+            agg.select("source", "source_number"), old_out, f"{old_chk}/parquet"
+        ).start()
+        try:
+            ranking_q.processAllAvailable()
+            parquet_q.processAllAvailable()
+        finally:
+            parquet_q.stop()
+    finally:
+        ranking_q.stop()
+    for sink in ("ranking", "parquet"):
+        assert _offset_conf(f"{old_chk}/{sink}", 0)[SHUFFLE] == "4"
+
+    # resume from it with the job
+    resumed = _run_pv(spark, old_in, old_out, old_chk, "b2.json")
+    old_last.update(resumed)
+    for sink in ("ranking", "parquet"):
+        batches = _batches(f"{old_chk}/{sink}")
+        assert len(batches) > 1
+        assert {_offset_conf(f"{old_chk}/{sink}", b)[SHUFFLE] for b in batches} == {"4"}
+        assert _state_partitions(f"{old_chk}/{sink}") == ["0", "1", "2", "3"]
+
+    # a fresh run of the job over the same files
+    new_in, new_out = str(tmp_path / "new_in"), str(tmp_path / "new_out")
+    _write_file(new_in, "b1.json", first)
+    fresh = _run_pv(spark, new_in, new_out, str(tmp_path / "new_chk"), "b2.json")
+
+    assert old_last == fresh
+    windows = sorted(
+        (r["source"], r["source_number"]) for r in spark.read.parquet(old_out).collect()
+    )
+    assert windows == sorted(
+        (r["source"], r["source_number"]) for r in spark.read.parquet(new_out).collect()
+    )
+    assert windows == sorted(
+        [(s, 50) for s in ("desktop", "mobile-app", "mobile-web")]
+        + [(s, 30) for s in ("desktop", "mobile-app", "mobile-web")]
+    )
+
+
+def _start_job(spark, tmp_path, job: str):
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.jobs import (
+        run_corpus_ingest_job,
+        run_pii_gate_job,
+        run_seasonal_anomaly_job,
+    )
+
+    in_dir, chk = str(tmp_path / "in"), str(tmp_path / "chk")
+    os.makedirs(in_dir, exist_ok=True)
+    if job == "product_view":
+        return run_product_view_job(spark, in_dir, str(tmp_path / "out"), chk)
+    if job == "corpus_ingest":
+        return [run_corpus_ingest_job(spark, in_dir, str(tmp_path / "out"), chk)]
+    if job == "seasonal_anomaly":
+        baseline = spark.createDataFrame(
+            [(10, 2.0, 1.0)], "hour_of_day int, mu double, sigma double"
+        )
+        return [run_seasonal_anomaly_job(spark, in_dir, baseline, str(tmp_path / "out"), chk)]
+    return run_pii_gate_job(
+        spark, in_dir, str(tmp_path / "corpus"), str(tmp_path / "quarantine"), chk
+    )
+
+
+@pytest.mark.parametrize(
+    "job, failing_sink",
+    [
+        ("product_view", "parquet"),
+        ("corpus_ingest", "corpus"),
+        ("seasonal_anomaly", "seasonal"),
+        ("pii_gate", "quarantine"),
+    ],
+)
+def test_job_start_leaves_session_conf_and_leaks_no_query(spark, tmp_path, job, failing_sink):
+    """Each job's start confs bind to its queries only: the session's SQL
+    conf reads the same after the job starts and after a start raises.
+    A failing start (the last sink's checkpoint path is a regular file)
+    leaves no query running, including the sinks started before it."""
+    conf = {k: spark.conf.get(k, None) for k in (SHUFFLE, NO_DATA)}
+    active = {q.id for q in spark.streams.active}
+
+    queries = _start_job(spark, tmp_path / "ok", job)
+    try:
+        assert {k: spark.conf.get(k, None) for k in conf} == conf
+    finally:
+        for q in queries:
+            q.stop()
+
+    chk = tmp_path / "bad" / "chk"
+    chk.mkdir(parents=True)
+    (chk / failing_sink).write_text("not a directory")
+    with pytest.raises(Exception, match="not a directory"):
+        _start_job(spark, tmp_path / "bad", job)
+    assert {k: spark.conf.get(k, None) for k in conf} == conf
+    assert {q.id for q in spark.streams.active} == active
+
+
+def test_corpus_ingest_job_skips_eviction_only_batches(spark, tmp_path):
+    """Three files whose later ones re-draw earlier texts, landed one at
+    a time so the watermark moves after each: every batch reads input
+    (no eviction-only batch), each batch writes at most one file per
+    source, and the kept fingerprints equal a batch recomputation."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from spark_nifi_kafka_connected_device_stream_spark.functions.textfns import (
+        normalize_text,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.operators.text import (
+        quality_features,
+        quality_prob,
+    )
+    from spark_nifi_kafka_connected_device_stream_spark.streaming.jobs import (
+        run_corpus_ingest_job,
+    )
+
+    def text(k, i):
+        return " ".join(f"f{k}d{i}t{j}" for j in range(60))
+
+    files = []
+    for k in range(3):
+        docs = [
+            {"doc_id": 100 * k + i, "text": text(k, i), "source": f"s{i % 3}",
+             "ts": f"2024-01-01 00:{5 * k + i // 6:02d}:{i:02d}"}
+            for i in range(24)
+        ]
+        # exact re-draws of every earlier file's first docs, in the horizon
+        docs += [
+            {"doc_id": 100 * k + 50 + j, "text": text(e, j), "source": f"s{(j + 1) % 3}",
+             "ts": f"2024-01-01 00:{5 * k + 4:02d}:{j:02d}"}
+            for e in range(k) for j in range(4)
+        ]
+        docs.append({"doc_id": 100 * k + 99, "text": "dup " * 40, "source": "s0",
+                     "ts": f"2024-01-01 00:{5 * k:02d}:59"})
+        files.append(docs)
+
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    out_dir = str(tmp_path / "corpus")
+    q = run_corpus_ingest_job(spark, str(in_dir), out_dir, str(tmp_path / "chk"))
+    try:
+        for k, docs in enumerate(files):
+            _write_file(str(in_dir), f"b{k}.json", [json.dumps(d) for d in docs])
+            q.processAllAvailable()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+
+    assert [p["numInputRows"] for p in progress] == [len(d) for d in files]
+    watermarks = [p["eventTime"].get("watermark") for p in progress]
+    assert len(set(watermarks)) == len(files)  # it moved before each later batch
+
+    for batch in range(len(files)):
+        with open(os.path.join(out_dir, "_spark_metadata", str(batch))) as f:
+            paths = [json.loads(line)["path"] for line in f.read().splitlines()[1:]]
+        sources = [p.split("/source=")[1].split("/")[0] for p in paths]
+        assert sources and len(sources) == len(set(sources)), paths
+
+    docs = [d for batch in files for d in batch]
+    raw = spark.createDataFrame(
+        [(d["text"],) for d in docs], "text string"
+    )
+    n_tok, dratio = quality_features(F.col("text"))
+    want = {
+        r[0]
+        for r in raw.filter(quality_prob(dratio, n_tok) >= F.lit(0.5))
+        .select(F.md5(normalize_text(F.col("text"))))
+        .distinct()
+        .collect()
+    }
+    kept = [r["fingerprint"] for r in spark.read.parquet(out_dir).collect()]
+    assert len(kept) == len(set(kept)) == len(want) == 3 * 24
+    assert set(kept) == want
